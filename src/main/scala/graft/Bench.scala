@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
@@ -26,38 +25,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse(Env.SfDir, "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse(Env.Cpus, "4")
     val reps = sys.env.getOrElse(Env.Reps, "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // a 238-query run leaves thousands of dereferenced shuffle
-      // dependencies; ContextCleaner only reclaims their files after a
-      // JVM GC notices the dead references, and the default periodic-GC
-      // interval (30 min) outlives the whole run — so the back half of
-      // a long run would otherwise accumulate every query's shuffle
-      // files on disk (r10 verdict #1, the bench back-half drift)
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      // r13 (guide §2.1/§2.2): always use the SORT-based shuffle writer
-      // (one data file + index per map task). The default
-      // bypassMergeThreshold=200 routes every <=200-partition shuffle
-      // through the bypass-merge writer, which creates numMaps x
-      // numPartitions files — at 32 maps x 32 partitions that is 1024
-      // file open/closes per exchange for kilobyte payloads (q72's
-      // 129 KB exchange spent 1.85 s summed over tasks in shuffle
-      // write). Cluster runs are unaffected: production shuffles run
-      // >200 partitions, where Spark already takes the sort path — this
-      // makes local/small-shuffle behavior match it. Measured on a
-      // 5-query shuffle-heavy subset, 3 interleaved A/B pairs:
-      // 5.7-7.3 s (sort) vs 8.9-10.3 s (bypass). Parameterized for
-      // re-measurement; the value is a writer-selection threshold, not
-      // a partition-count tuning.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse(Env.Bypass, "1"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
     // Exogenous-window canary (r12 verdict #4): a SEPARATE fixed-work
     // timer process (tools/canary/Canary.java via JDK source-file mode
     // — no classpath needed, so it launches identically under sbt).
@@ -80,12 +49,6 @@ object Bench {
       } catch { case e: java.io.IOException =>
         System.err.println(s"BENCH CANARY launch failed: ${e.getMessage}"); None
       }
-    // releasing a localCheckpoint logs one WARN per RDD ("lineage has
-    // been truncated...") — correct behavior under the Caches.pin
-    // release discipline, but hundreds of them would drown the bench
-    // output, so the rdd logger runs at ERROR here
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
     // optional debug filter: SPARK_GRAFT_ONLY=regex runs a subset.
     // Full runs skip the fixed-size semantics audits (benchExcluded) —
     // an explicit ONLY regex still selects them for dev timing.
@@ -163,18 +126,15 @@ object Bench {
       }
       qIndex += 1
       val gc0 = gcMs
-      // scale-shape pins (q86) time ONE rep: min-of-reps exists to cut
-      // host noise on throughput queries, not to double a pin's cost
-      val qReps = if (SparkEntry.singleRep(name)) 1 else reps
-      var times = runReps(qReps)
+      var times = runReps(reps)
       // Sub-second queries get extra reps (r8 verdict #5): min-of-2 on
       // a trivial line still carried 8–10× host-noise swings between
       // artifacts (q06/q15 in BENCH_r08, byte-identical code since r7).
       // Extra reps on a < 1 s line are cheap by definition; the target
       // is min-of-4 so the committed artifact's sub-second cohort stops
       // moving multi-x on identical code.
-      if (!SparkEntry.singleRep(name) && times.nonEmpty && times.min < 1.0 && qReps < 4)
-        times = times ++ runReps(4 - qReps)
+      if (times.nonEmpty && times.min < 1.0 && reps < 4)
+        times = times ++ runReps(4 - reps)
       // Dispersion localizer (r11 verdict #1): when this query's reps
       // disagree by >3x, print EVERY rep time plus the GC time the
       // query's reps accumulated — separates a one-rep environmental

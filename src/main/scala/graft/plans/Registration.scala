@@ -6,10 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Shared idempotent SQL-function registration.
   *
-  * Operators call `X.register(session)` defensively before every use
-  * (the session may not have been built with GraftExtensions, and
-  * `spark.sql.extensions` is static — it only binds to the JVM's first
-  * session). `createOrReplaceTempFunction` is safe to repeat but logs a
+  * Operators call `X.register(session)` before every use, since any
+  * session — including one the library did not build — may run them.
+  * `createOrReplaceTempFunction` is safe to repeat but logs a
   * "replaced a previously registered function" WARN each time; guarding
   * on existence keeps repeated registration silent.
   */

@@ -71,4 +71,14 @@ class BenchPlanSpec extends SparkSpec {
   test("q73 incremental admission anti-joins the persisted store") {
     assert(plan("q73_incremental_dedup").contains("LeftAnti"))
   }
+
+  test("benchBuilds and benchExcluded name catalog queries; audits are excluded") {
+    // Bench filters benchBuilds through the selected catalog, so a
+    // misspelt name would drop out silently and its store build would
+    // land on the first timed rep instead of the untimed setup
+    val names = SparkEntry.queries.keySet
+    val unknown = (SparkEntry.benchBuilds.toSet ++ SparkEntry.benchExcluded) -- names
+    assert(unknown.isEmpty, s"not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    assert(SparkEntry.auditQueries.subsetOf(SparkEntry.benchExcluded))
+  }
 }

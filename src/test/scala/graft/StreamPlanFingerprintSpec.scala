@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Per-batch INTERNAL plan net for the streaming audit loops (r12
   * verdict #5). PlanFingerprintSpec deliberately skips the audit
   * queries — their outer plan is a constant scan of the folded result —
@@ -17,27 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * Update workflow (intended plan changes), same as PLANS.json:
   *   SPARK_GRAFT_PLANS_UPDATE=1 sbt "testOnly graft.StreamPlanFingerprintSpec"
   * then review the STREAMPLANS.json git diff alongside the change.
-  *
-  * Hermetic session, PlanFingerprintSpec convention: a fresh PLAIN
-  * session (no extensions) so the artifact pins the driver's
-  * environment and the spec is order-independent in the full suite.
   */
-class StreamPlanFingerprintSpec extends AnyFunSuite {
-  private val sf = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = {
-    Caches.releaseAll()
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(_.sparkContext.stop())
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
+class StreamPlanFingerprintSpec extends SparkSpec {
   /** Loops whose fingerprints are intentionally changing THIS change;
     * empty at rest. */
   private val intendedChanges: Set[String] = Set.empty
@@ -86,7 +64,7 @@ class StreamPlanFingerprintSpec extends AnyFunSuite {
     val current = graft.tools.StreamPlans.collected
     assert(current.nonEmpty, "no per-batch plans were recorded — the " +
       "foreachBatch record() hooks or the active-query lookup broke")
-    if (sys.env.get("SPARK_GRAFT_PLANS_UPDATE").contains("1")) {
+    if (sys.env.get(Env.PlansUpdate).contains("1")) {
       val json = current.toSeq.sortBy(_._1)
         .map { case (k, fps) =>
           fps.map("\"" + _ + "\"").mkString(s"""  "$k": [""", ", ", "]")
